@@ -2435,7 +2435,7 @@ def delete_by_query(
     granularity. This is the post-merge semantics (deleted docs absent
     from stats), the contract our oracles use everywhere."""
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
-    from lucene_mapreduce_spark.query.bm25_df import score_and_topk
+    from lucene_mapreduce_spark.query.bm25_df import exact_scores, query_terms, with_idf
     from lucene_mapreduce_spark.query.segments import (
         boolean_match,
         live_doclens,
@@ -2462,13 +2462,15 @@ def delete_by_query(
             [], "doc_id bigint, score double, rank int"
         )
     df_t = pos.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
+    qterms = query_terms(
+        spark.createDataFrame([("q0", query_text)], "query_id string, query_text string")
+    )
     matched = (
-        pos.withColumn("query_id", F.lit("q0"))
-        .join(F.broadcast(df_t), "term")
-        .withColumn("n_docs", F.lit(int(row["n"])))
+        pos.join(F.broadcast(qterms), "term")
+        .join(F.broadcast(with_idf(df_t, int(row["n"]))), "term")
         .withColumn("avgdl", F.lit(float(row["avgdl"])))
     )
-    out = score_and_topk(matched, k=k, round_to=6)
+    out = exact_scores(matched, k=k, round_to=6)
     return out.select("doc_id", "score", "rank")
 
 
@@ -4718,7 +4720,11 @@ def most_fields_topk(
     only the keyword field)."""
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25_df import corpus_postings, exact_scores
+    from lucene_mapreduce_spark.query.bm25_df import (
+        corpus_postings,
+        exact_scores,
+        scan_matched,
+    )
 
     docs = load(spark, sf_dir, "documents")
     postings, doclens = corpus_postings(docs)
@@ -4727,19 +4733,14 @@ def most_fields_topk(
         F.avg(F.col("dl").cast("double")).alias("avgdl"),
     )
     qts = sorted(set(tokenize_string(query_text)))
-    qterms = spark.createDataFrame([("q0", t) for t in qts], "query_id string, term string")
-    df_t = (
-        postings.join(F.broadcast(qterms.select("term")), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
+    matched = scan_matched(
+        postings,
+        doclens,
+        spark.createDataFrame([("q0", query_text)], "query_id string, query_text string"),
     )
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
+    tleg = exact_scores(matched).select(
+        "doc_id", F.col("score").alias("tscore")
     )
-    tleg = exact_scores(matched).select("doc_id", F.col("score").alias("tscore"))
     dfk = docs.groupBy(kw_field).agg(F.count(F.lit(1)).cast("double").alias("dfk"))
     kleg = (
         docs.select("doc_id", kw_field)
@@ -7512,38 +7513,20 @@ def nqc_wig_predictors(
     6dp so page membership follows the expansion-query rule);
     moments ride DECIMAL sums of the 6dp scores and their exact-12dp
     squares.  One corpus scan, one row."""
-    from lucene_mapreduce_spark.functions.tokenize import (
-        tokenize_col,
-        tokenize_string,
-    )
+    from lucene_mapreduce_spark.functions.tokenize import tokenize_string
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25_df import corpus_postings, exact_scores
+    from lucene_mapreduce_spark.query.bm25_df import (
+        corpus_postings,
+        exact_scores,
+        scan_matched,
+    )
 
     docs = load(spark, sf_dir, "documents")
     queries = spark.createDataFrame(
         [("q0", query_text)], "query_id string, query_text string"
     )
     postings, doclens = corpus_postings(docs)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-    qterms = queries.select(
-        "query_id", F.explode(tokenize_col("query_text")).alias("term")
-    ).distinct()
-    df_t = (
-        postings.join(
-            F.broadcast(qterms.select("term").distinct()), "term"
-        )
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-    )
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
+    matched = scan_matched(postings, doclens, queries)
     allscores = exact_scores(matched, round_to=6).select("doc_id", "score")
     topk = ranked_topk(
         allscores, [F.desc("score"), F.asc("doc_id")], k
@@ -7773,11 +7756,11 @@ def query_clarity_score(
     exact_scores rounded-score rule (desc score, asc doc_id); all four
     LM inputs are exact BIGINTs; each term's contribution is one fixed
     IEEE chain folded as 12dp DECIMAL.  One corpus scan, one row."""
-    from lucene_mapreduce_spark.functions.tokenize import tokenize_col
     from lucene_mapreduce_spark.operators.parity import ranked_topk
     from lucene_mapreduce_spark.query.bm25_df import (
         corpus_postings,
         exact_scores,
+        scan_matched,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -7785,24 +7768,7 @@ def query_clarity_score(
         [("q0", query_text)], "query_id string, query_text string"
     )
     postings, doclens = corpus_postings(docs)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-    qterms = queries.select(
-        "query_id", F.explode(tokenize_col("query_text")).alias("term")
-    ).distinct()
-    df_t = (
-        postings.join(F.broadcast(qterms.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-    )
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
+    matched = scan_matched(postings, doclens, queries)
     allscores = exact_scores(matched, round_to=6).select("doc_id", "score")
     topk = ranked_topk(
         allscores, [F.desc("score"), F.asc("doc_id")], k
@@ -7936,12 +7902,12 @@ def maxscore_term_partition(
     per-term max BM25 contribution over the corpus (rounded 6dp, the
     expansion-family rule); theta comes from the exact_scores page.
     One corpus scan, query-term-bounded output."""
-    from lucene_mapreduce_spark.functions.tokenize import tokenize_col
     from lucene_mapreduce_spark.operators.parity import ranked_topk
     from lucene_mapreduce_spark.query.bm25_df import (
-        _contrib_frame,
+        contrib_expr,
         corpus_postings,
         exact_scores,
+        scan_matched,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -7949,29 +7915,9 @@ def maxscore_term_partition(
         [("q0", query_text)], "query_id string, query_text string"
     )
     postings, doclens = corpus_postings(docs)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-    qterms = queries.select(
-        "query_id", F.explode(tokenize_col("query_text")).alias("term")
-    ).distinct()
-    df_t = (
-        postings.join(F.broadcast(qterms.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-    )
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    ub = (
-        _contrib_frame(matched)
-        .groupBy("term")
-        .agg(F.round(F.max("contrib"), 6).alias("ub"))
-        .join(F.broadcast(df_t), "term")
+    matched = scan_matched(postings, doclens, queries)
+    ub = matched.groupBy("term", "df_t").agg(
+        F.round(F.max(contrib_expr()), 6).alias("ub")
     )
     page = ranked_topk(
         exact_scores(matched, round_to=6).select("doc_id", "score"),
@@ -8422,11 +8368,11 @@ def alpha_ndcg_diversity(
     are 1/log2(r+1) on the shared 1/ln2 literal, and the ideal
     ordering sorts the gain multiset descending (equal gains make the
     ideal DCG order-free).  One corpus scan, one row."""
-    from lucene_mapreduce_spark.functions.tokenize import tokenize_col
     from lucene_mapreduce_spark.operators.parity import ranked_topk
     from lucene_mapreduce_spark.query.bm25_df import (
         corpus_postings,
         exact_scores,
+        scan_matched,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -8434,24 +8380,7 @@ def alpha_ndcg_diversity(
         [("q0", query_text)], "query_id string, query_text string"
     )
     postings, doclens = corpus_postings(docs)
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-    qterms = queries.select(
-        "query_id", F.explode(tokenize_col("query_text")).alias("term")
-    ).distinct()
-    df_t = (
-        postings.join(F.broadcast(qterms.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-    )
-    matched = (
-        postings.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(doclens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
+    matched = scan_matched(postings, doclens, queries)
     page = ranked_topk(
         exact_scores(matched, round_to=6).select("doc_id", "score"),
         [F.desc("score"), F.asc("doc_id")],

@@ -105,12 +105,18 @@ def _global_ranked(
     for pid in sorted(sizes):
         offsets[pid] = acc
         acc += sizes[pid]
-    omap = F.create_map(
-        *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
+    # an empty frame has no partitions to offset (and create_map() with no
+    # arguments does not type-check)
+    offset = (
+        F.create_map(*[F.lit(x) for kv in sorted(offsets.items()) for x in kv])[
+            F.col("_pid")
+        ]
+        if offsets
+        else F.lit(0)
     )
     wloc = Window.partitionBy("_pid").orderBy(F.asc(order_col))
     ranked = part.withColumn(
-        rank_col, F.row_number().over(wloc) + omap[F.col("_pid")]
+        rank_col, F.row_number().over(wloc) + offset
     ).drop("_pid")
     return ranked, acc
 

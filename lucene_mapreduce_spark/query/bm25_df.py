@@ -15,16 +15,28 @@ Scale shape (100 TB corpus, 1000 executors):
   (``corpus_postings`` is the cache point; the index build persists exactly
   this + stats so queries skip the corpus scan entirely).
 
-Determinism: per-(query, doc) scores are accumulated in ascending term order
-via sort_array + aggregate over float64 — bit-identical results at any
-parallelism level (the N vs 4N scaling-efficiency requirement includes
-correctness at both sizes).
+Determinism: the oracle adds every query term's contribution in ascending
+term order, 0.0 for a term the doc lacks (and x + 0.0 == x), so a doc's
+score is the left fold of its matched terms' contributions in term order.
+One window partitioned by (query, doc) and ordered by term folds exactly
+that: Spark's sum over the whole frame adds the partition's rows in sort
+order. Scores are bit-identical at any parallelism level with no list
+building and no per-query-width state (a 1024-term expansion costs what
+its matched postings cost), and one row_number window ranks them.
+
+idf is taken per term, on the term-scale df_t frame, by Arrow's ``ln``
+(pyarrow.compute.ln), which equals the oracle's ``math.log`` bit for bit;
+Spark SQL's ``ln`` (fdlibm) differs from it in the last bit for about 8% of
+arguments.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Iterator
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lucene_mapreduce_spark.functions.tokenize import tokenize_col, tokenize_pandas_udf
 from lucene_mapreduce_spark.query.bm25 import B, K1
@@ -60,6 +72,68 @@ def corpus_postings(
     return postings, doclens
 
 
+def query_terms(queries: DataFrame) -> DataFrame:
+    """(query_id, term) — one row per distinct term of each query row.
+    Rows sharing a query_id repeat their common terms; exact_scores
+    counts such a term once, so they score as one query over the joint
+    term set."""
+    return queries.select(
+        "query_id",
+        F.explode(F.array_distinct(tokenize_col("query_text"))).alias("term"),
+    )
+
+
+def _idf_batches(batches: Iterator) -> Iterator:
+    import pyarrow.compute as pc
+
+    for b in batches:
+        n = pc.cast(b.column("n_docs"), "float64")
+        df = pc.cast(b.column("df_t"), "float64")
+        idf = pc.ln(pc.add(1.0, pc.divide(pc.add(pc.subtract(n, df), 0.5), pc.add(df, 0.5))))
+        yield b.append_column("idf", idf)
+
+
+def with_idf(df_t: DataFrame, n_docs: int | None = None) -> DataFrame:
+    """Append ``idf`` = ln(1 + (N - df_t + 0.5) / (df_t + 0.5)) to a
+    term-scale frame holding ``df_t`` and, unless ``n_docs`` is given,
+    an ``n_docs`` column. One Arrow pass over a frame of one row per term."""
+    if n_docs is not None:
+        df_t = df_t.withColumn("n_docs", F.lit(n_docs))
+    schema = T.StructType(df_t.schema.fields + [T.StructField("idf", T.DoubleType())])
+    return df_t.mapInArrow(_idf_batches, schema)
+
+
+def contrib_expr() -> Column:
+    """The BM25 per-term contribution over a matched frame's (tf, dl,
+    avgdl, idf) columns."""
+    tf = F.col("tf").cast("double")
+    dl = F.col("dl").cast("double")
+    denom = tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / F.col("avgdl"))
+    return F.col("idf") * (tf * F.lit(K1 + 1.0)) / denom
+
+
+def scan_matched(postings: DataFrame, doclens: DataFrame, queries: DataFrame) -> DataFrame:
+    """The matched frame of a query batch against a corpus' (postings,
+    doclens): (query_id, term, doc_id, tf, dl, df_t, n_docs, avgdl, idf)."""
+    stats = doclens.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg(F.col("dl").cast("double")).alias("avgdl"),
+    )
+    qterms = query_terms(queries)
+    # df_t over the full corpus, restricted to the (few) query terms.
+    # semi-join first so the term-df aggregation only shuffles matching rows.
+    df_t = (
+        postings.join(F.broadcast(qterms.select("term").distinct()), "term", "inner")
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df_t"))
+    )
+    return (
+        postings.join(F.broadcast(qterms), "term", "inner")
+        .join(F.broadcast(with_idf(df_t.crossJoin(F.broadcast(stats)))), "term", "inner")
+        .join(doclens, "doc_id", "inner")
+    )
+
+
 def bm25_scan_topk(
     docs: DataFrame,
     queries: DataFrame,
@@ -77,158 +151,62 @@ def bm25_scan_topk(
     exact float64.
     """
     postings, doclens = corpus_postings(docs, doc_col, text_col)
-
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-
-    qterms = (
-        queries.select(
-            "query_id", F.explode(tokenize_col("query_text")).alias("term")
-        )
-        .distinct()
-    )
-
-    # df_t over the full corpus, restricted to the (few) query terms.
-    # semi-join first so the term-df aggregation only shuffles matching rows.
-    q_term_list = qterms.select("term").distinct()
-    df_t = (
-        postings.join(F.broadcast(q_term_list), "term", "inner")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df_t"))
-    )
-
-    matched = (
-        postings.join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .join(doclens, "doc_id", "inner")
-        .crossJoin(F.broadcast(stats))
-    )
-    return score_and_topk(matched, k=k, round_to=round_to)
-
-
-def _contrib_frame(matched: DataFrame) -> DataFrame:
-    """(query_id, doc_id, term, contrib) — the BM25 per-term contribution
-    expression, shared by the top-k and all-scores paths."""
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5)) / (F.col("df_t") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / F.col("avgdl"))
-    contrib = idf * (tf * F.lit(K1 + 1.0)) / denom
-    return matched.select("query_id", "doc_id", F.col("term"), contrib.alias("contrib"))
+    return exact_scores(scan_matched(postings, doclens, queries), k=k, round_to=round_to)
 
 
 def exact_scores(
-    matched: DataFrame, round_to: int | None = None
+    matched: DataFrame,
+    k: int | None = None,
+    round_to: int | None = None,
+    min_match: int = 1,
 ) -> DataFrame:
-    """(query_id, doc_id, score) for EVERY matched doc — canonical
-    ascending-term accumulation, NO ranking window. For operators that
-    impose their own (narrower) ranking downstream — collapse partitions
-    by group, clustering never ranks globally — so no single-partition
-    per-query sort ever materializes."""
-    per_doc = _contrib_frame(matched).groupBy("query_id", "doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
-    )
-    if round_to is not None:
-        per_doc = per_doc.withColumn("score", F.round("score", round_to))
-    return per_doc
+    """Exact BM25 scores of a matched frame — the one scorer of every
+    Spark batch path.
 
-
-def score_and_topk(
-    matched: DataFrame, k: int = 10, round_to: int | None = None
-) -> DataFrame:
-    """Score a matched-postings frame and take per-query top-k.
-
-    ``matched`` needs columns (query_id, doc_id, term, tf, dl, df_t, n_docs,
-    avgdl). Shared by the corpus-scan path and the segment/index path so the
-    scoring spec exists exactly once in DataFrame form.
-
-    Two-phase exactness (measured 5x faster than canonically re-summing
-    every doc): phase 1 ranks with a plain partial-aggregated F.sum —
-    order-nondeterministic only in the last float64 ulps; phase 2 exactly
-    rescores (canonical ascending-term accumulation) every doc whose
-    approximate score is within EPS of the k-th, where EPS (1e-9) exceeds
-    worst-case summation error by orders of magnitude. Ties far wider than
-    float error (e.g. identical documents) all fall inside the margin, so
-    the final (score desc, doc_id asc) top-k is bit-identical to the oracle.
+    ``matched`` needs (query_id, doc_id, term, tf, dl, avgdl, idf); a
+    repeated (query, doc, term) row counts once. An optional ``weight`` column
+    multiplies each term's contribution (boosted queries, parenthesized as
+    the serving path's ``w * contrib``). Docs matching fewer than
+    ``min_match`` distinct terms drop out. Returns (query_id, doc_id,
+    score) for every matched doc, or with ``k`` the per-query top k by
+    (score desc, doc_id asc) plus a 1-based ``rank``; ``round_to`` rounds
+    the returned score (ranking uses the exact one).
     """
-    # No persist anywhere in this plan (guide §5): the contrib and approx
-    # frames are ROW-SCALE (one row per matched (query, doc[, term])), and
-    # pinning them in executor storage squeezes execution memory for the
-    # very aggregation/window that reads them — measured 42 s vs 28 s on
-    # the 10k-query batch leg with/without the persists, and the pressure
-    # compounds across a long-lived session. The kth-probe branch and the
-    # candidate branch share one identical groupBy subtree, so Spark's
-    # ReusedExchange dedupes that shuffle at runtime; only the phase-2
-    # rescore recomputes the (cheap, column-pruned) posting decode.
-    scored = _contrib_frame(matched)
-
-    eps = 1e-9
-    # phase 1 runs on the non-null (query_id, doc_id) keyspace, declared
-    # ONCE here: the kth-probe branch and the candidate branch otherwise
-    # end up with DIFFERENT pushed-down null filters (the left join pushes
-    # isnotnull(query_id) into kth's subtree, the phase-2 semi join pushes
-    # isnotnull on both keys into cand's), and that one-conjunct difference
-    # defeats canonicalized-subtree equality — AQE then materializes the
-    # same decode+partial-aggregation shuffle TWICE. With the filters
-    # declared on the shared frame both branches canonicalize identically
-    # and the second branch becomes a ReusedExchange (verified in the
-    # executed plan). Join keys are never null here: query_id comes from
-    # the literal query frame, doc_id from the posting decode.
-    nn = scored.filter(
-        F.col("query_id").isNotNull() & F.col("doc_id").isNotNull()
-    )
-    approx = nn.groupBy("query_id", "doc_id").agg(F.sum("contrib").alias("s_ap"))
-    w_ap = Window.partitionBy("query_id").orderBy(
-        F.col("s_ap").desc(), F.col("doc_id").asc()
-    )
-    # rn == k is a rank-limit filter: Spark's WindowGroupLimit maintains a
-    # per-partition top-k heap map-side instead of fully sorting every
-    # query's candidate set. The candidate filter below deliberately joins
-    # approx (not the ranked frame) so the ranking window is evaluated
-    # exactly once — the previous shape re-ran the full per-query sort a
-    # second time just to carry an unused rn column into the filter.
-    kth = (
-        approx.withColumn("rn", F.row_number().over(w_ap))
-        .filter(F.col("rn") == k)
-        .select("query_id", F.col("s_ap").alias("kth_s"))
-    )
-    cand = (
-        approx.join(F.broadcast(kth), "query_id", "left")
-        .filter(F.col("kth_s").isNull() | (F.col("s_ap") >= F.col("kth_s") - F.lit(eps)))
-        .select("query_id", "doc_id")
-    )
-
-    # exact canonical rescore of the (tiny) candidate set
-    per_doc = (
-        # AQE broadcasts cand at runtime when it is small (usual case);
-        # adversarially tie-heavy corpora fall back to a shuffled semi-join
-        scored.join(cand, ["query_id", "doc_id"], "left_semi")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score")
-        )
-    )
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
+    contrib = contrib_expr()
+    if "weight" in matched.columns:
+        contrib = F.col("weight") * contrib
+    by_term = Window.partitionBy("query_id", "doc_id").orderBy("term")
+    whole = by_term.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    # the sum over the whole frame is the oracle's ascending-term fold;
+    # keeping one row per (query, doc) after it is a filter, not a limit:
+    # a row_number pushed below the sum would cut the fold short. Both
+    # windows share one sort; the first drops repeated terms.
     out = (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        matched.select(
+            "query_id",
+            "doc_id",
+            "term",
+            contrib.alias("contrib"),
+            F.lag("term").over(by_term).alias("prev"),
+        )
+        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("term")))
+        .select(
+            "query_id",
+            "doc_id",
+            F.sum("contrib").over(whole).alias("score"),
+            F.count(F.lit(1)).over(whole).alias("hits"),
+            F.row_number().over(by_term).alias("nth"),
+        )
+        .filter((F.col("nth") == 1) & (F.col("hits") >= min_match))
+        .select("query_id", "doc_id", "score")
     )
+    if k is not None:
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        )
+        # rank <= k is a rank-limit filter: Spark's WindowGroupLimit keeps a
+        # per-partition top-k heap map-side instead of sorting every hit
+        out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))
-    return out.select("query_id", "doc_id", "score", "rank")
+    return out

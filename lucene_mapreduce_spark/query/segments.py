@@ -12,7 +12,9 @@ with partition-pruned parquet reads of posting blocks:
   no doclens side-join;
 - multi-segment reads mask shadowed (updated) docs via the latest-wins rule;
   a fully merged index (1 segment) skips masking entirely;
-- scoring + top-k reuses score_and_topk — one scoring spec for all paths.
+- every path shares one query-term prologue (slotted terms, the pushdown
+  term list or frame) and scores through bm25_df.exact_scores — one
+  scoring spec for all paths.
 """
 
 from __future__ import annotations
@@ -24,9 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lucene_mapreduce_spark.functions.tokenize import tokenize_col
 from lucene_mapreduce_spark.index.manifest import Manifest, load_manifest, segment_dir
-from lucene_mapreduce_spark.query.bm25_df import score_and_topk
+from lucene_mapreduce_spark.query.bm25_df import exact_scores, query_terms, with_idf
 
 
 def _decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -620,10 +621,10 @@ def bm25_index_topk(
     term frame broadcast-joins the postings scan, nothing materializes on
     the driver.
     """
-    matched = _matched_frame(
+    matched = _batch_matched(
         spark, index_dir, queries, max_pushdown_terms, manifest=manifest
     )
-    return score_and_topk(matched, k=k, round_to=round_to)
+    return exact_scores(matched, k=k, round_to=round_to)
 
 
 def bm25_scores(
@@ -637,45 +638,83 @@ def bm25_scores(
     exact-score face of the index path, for operators that impose their
     own narrower ranking (collapse partitions by group) and must never
     funnel the full hit set through one per-query window partition."""
-    from lucene_mapreduce_spark.query.bm25_df import exact_scores
-
-    matched = _matched_frame(spark, index_dir, queries, max_pushdown_terms)
+    matched = _batch_matched(spark, index_dir, queries, max_pushdown_terms)
     return exact_scores(matched, round_to=round_to)
 
 
+def _probe_terms(
+    queries: DataFrame, max_pushdown_terms: int
+) -> tuple[DataFrame, list[str] | DataFrame]:
+    """(qterms, terms) — the query-term prologue of every index path: the
+    (query_id, term) frame and the terms to read.
+
+    The bounded probe collects at most max_pushdown_terms + 1 distinct
+    terms. When it does not truncate, the terms go driver-side into phash
+    pruning and row-group pushdown; a larger batch keeps its terms as a
+    frame (broadcast-joined, never collected)."""
+    qterms = query_terms(queries)
+    qterm_list = qterms.select("term").distinct()
+    head = qterm_list.limit(max_pushdown_terms + 1).collect()
+    if len(head) <= max_pushdown_terms:
+        return qterms, [r["term"] for r in head]
+    return qterms, qterm_list
+
+
+def _join_terms(
+    postings: DataFrame, qterms: DataFrame, df_t: DataFrame, n_docs: int, avgdl: float
+) -> DataFrame:
+    """The matched frame exact_scores reads: decoded postings joined to the
+    query terms and the per-term idf (both term-scale, broadcast)."""
+    return (
+        postings.join(F.broadcast(qterms), "term", "inner")
+        .join(F.broadcast(with_idf(df_t, n_docs)), "term", "inner")
+        .withColumn("avgdl", F.lit(float(avgdl)))
+    )
+
+
+def _driver_terms(
+    spark: SparkSession, terms: list[str]
+) -> tuple[DataFrame, list[str]]:
+    """The (qterms, terms) pair of _probe_terms for one query ("q0") whose
+    terms the driver already holds — no probe job."""
+    terms = sorted(set(terms))
+    qterms = spark.createDataFrame(
+        [("q0", t) for t in terms], "query_id string, term string"
+    )
+    return qterms, terms
+
+
 def _matched_frame(
+    spark: SparkSession,
+    index_dir: str,
+    m: Manifest,
+    qterms: DataFrame,
+    terms: list[str] | DataFrame,
+    stats: tuple[int, float],
+) -> DataFrame:
+    """The matched frame of query terms over the whole index — the
+    shared body of the ranked, unranked, MoreLikeThis and weighted paths.
+    ``stats`` is the index's (n_docs, avgdl) from exact_stats."""
+    postings = read_postings(spark, index_dir, terms, m)
+    df_t = term_dfs(spark, index_dir, terms, m, postings=postings)
+    return _join_terms(postings, qterms, df_t, *stats)
+
+
+def _batch_matched(
     spark: SparkSession,
     index_dir: str,
     queries: DataFrame,
     max_pushdown_terms: int,
     manifest: Manifest | None = None,
 ) -> DataFrame:
-    """(query_id, doc_id, term, tf, dl, df_t, n_docs, avgdl) for a query
-    batch — the shared prologue of the ranked and unranked index paths.
-    ``manifest`` overrides the on-disk manifest (point-in-time reads)."""
+    """The matched frame of a query batch: the probe prologue, then
+    _matched_frame. ``manifest`` overrides the on-disk manifest
+    (point-in-time reads)."""
     m = manifest or load_manifest(index_dir)
     assert m is not None
-    qterms = (
-        queries.select("query_id", F.explode(tokenize_col("query_text")).alias("term"))
-        .distinct()
-    )
-    qterm_list = qterms.select("term").distinct()
-    # bounded probe: fetch at most max_pushdown_terms+1 rows to pick the plan
-    head = qterm_list.limit(max_pushdown_terms + 1).collect()
-    if len(head) <= max_pushdown_terms:
-        terms: list[str] | DataFrame = [r["term"] for r in head]
-    else:
-        terms = qterm_list
-    n_docs, avgdl = exact_stats(spark, index_dir, m)
-
-    postings = read_postings(spark, index_dir, terms, m)
-    df_t = term_dfs(spark, index_dir, terms, m, postings=postings)
-
-    return (
-        postings.join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .withColumn("n_docs", F.lit(float(n_docs)))
-        .withColumn("avgdl", F.lit(float(avgdl)))
+    qterms, terms = _probe_terms(queries, max_pushdown_terms)
+    return _matched_frame(
+        spark, index_dir, m, qterms, terms, exact_stats(spark, index_dir, m)
     )
 
 
@@ -696,63 +735,24 @@ def ext_score_topk(
     matching >= min_match distinct scoring terms; each matched term
     contributes weight * BM25(term, doc); accumulation is canonical
     ascending-term order (float-exact vs the oracle); ranking is
-    (score desc, doc_id asc) via TakeOrderedAndProject.
+    (score desc, doc_id asc).
 
-    Plan shape: one pruned posting read for the term set; df_t and the
-    weight table broadcast; candidate selection is a map-side-combinable
-    distinct-term count at doc granularity; only the aggregated per-doc
-    scores are ranked."""
-    from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25 import B, K1
-
-    terms = sorted({t for t, _ in score_terms})
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double, rank int")
-    n_docs, avgdl = exact_stats(spark, index_dir)
-    postings = read_postings(spark, index_dir, terms)
-    df_t = term_dfs(spark, index_dir, terms, postings=postings)
-    wdf = spark.createDataFrame(
-        sorted(score_terms), "term string, weight double"
+    Plan shape: the shared index prologue with every term pushed down; the
+    weight table broadcasts onto the matched frame, and exact_scores counts
+    each doc's matched terms for min_match in the scoring window."""
+    m = load_manifest(index_dir)
+    assert m is not None
+    qterms, terms = _driver_terms(spark, [t for t, _ in score_terms])
+    matched = _matched_frame(
+        spark, index_dir, m, qterms, terms, exact_stats(spark, index_dir, m)
     )
-
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
+    wdf = spark.createDataFrame(sorted(score_terms), "term string, weight double")
+    out = exact_scores(
+        matched.join(F.broadcast(wdf), "term", "inner"),
+        k=k,
+        round_to=round_to,
+        min_match=min_match,
     )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * dl / F.lit(float(avgdl))
-    )
-    # parenthesized exactly as the serving path accumulates
-    # (w * contrib, wand.py search_parsed_ext) so the two are float-identical
-    contrib = F.col("weight") * (idf * (tf * F.lit(K1 + 1.0)) / denom)
-
-    matched = (
-        postings.join(F.broadcast(wdf), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .select("doc_id", "term", contrib.alias("contrib"))
-    )
-    cand = (
-        postings.groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("mm"))
-        .filter(F.col("mm") >= min_match)
-        .select("doc_id")
-    )
-    scores = matched.groupBy("doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
-    )
-    out = cand.join(scores, "doc_id", "left").select(
-        "doc_id", F.coalesce("score", F.lit(0.0)).alias("score")
-    )
-    out = ranked_topk(out, [F.desc("score"), F.asc("doc_id")], k)
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
     return out.select("doc_id", "score", "rank")
 
 
@@ -807,7 +807,7 @@ def more_like_this(
             [], "query_id string, doc_id bigint, score double, rank int"
         )
 
-    n_docs, avgdl = exact_stats(spark, index_dir)
+    n_docs, avgdl = exact_stats(spark, index_dir, m)
     dfmap = {
         r["term"]: int(r["df_t"])
         for r in term_dfs(spark, index_dir, cand, m).collect()
@@ -822,19 +822,11 @@ def more_like_this(
     )
     qts = [t for _, t in ranked[:max_terms]]
 
-    postings = read_postings(spark, index_dir, qts, m)
-    df_t = term_dfs(spark, index_dir, qts, m, postings=postings)
-    qterms = spark.createDataFrame(
-        [("q0", t) for t in qts], "query_id string, term string"
+    qterms, terms = _driver_terms(spark, qts)
+    matched = _matched_frame(spark, index_dir, m, qterms, terms, (n_docs, avgdl))
+    return exact_scores(
+        matched.filter(F.col("doc_id") != src_doc), k=k, round_to=round_to
     )
-    matched = (
-        postings.filter(F.col("doc_id") != src_doc)
-        .join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .withColumn("n_docs", F.lit(float(n_docs)))
-        .withColumn("avgdl", F.lit(float(avgdl)))
-    )
-    return score_and_topk(matched, k=k, round_to=round_to)
 
 
 def bm25_range_topk(
@@ -868,15 +860,7 @@ def bm25_range_topk(
     c_range = (lo // m.chunk_docs, (hi - 1) // m.chunk_docs)
     in_range = (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
 
-    qterms = (
-        queries.select("query_id", F.explode(tokenize_col("query_text")).alias("term"))
-        .distinct()
-    )
-    qterm_list = qterms.select("term").distinct()
-    head = qterm_list.limit(max_pushdown_terms + 1).collect()
-    terms: list[str] | DataFrame = (
-        [r["term"] for r in head] if len(head) <= max_pushdown_terms else qterm_list
-    )
+    qterms, terms = _probe_terms(queries, max_pushdown_terms)
 
     # range-scoped stats from the chunk-pruned doclen rows (boundary chunks
     # need the exact docid filter — a chunk can straddle lo or hi)
@@ -897,10 +881,5 @@ def bm25_range_topk(
         in_range
     )
     df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-    matched = (
-        postings.join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .withColumn("n_docs", F.lit(float(n_docs)))
-        .withColumn("avgdl", F.lit(float(avgdl)))
-    )
-    return score_and_topk(matched, k=k, round_to=round_to)
+    matched = _join_terms(postings, qterms, df_t, n_docs, avgdl)
+    return exact_scores(matched, k=k, round_to=round_to)

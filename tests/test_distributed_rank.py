@@ -4,6 +4,7 @@ ppcc_exponential_test)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -144,3 +145,39 @@ def test_running_sum_tie_blocks_are_prefix_invariant(spark):
         lambda s: tuple(sorted(s))
     )
     assert key(got).equals(key(exp))
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_helpers_on_empty_and_one_row(spark, n):
+    """Empty and single-row inputs: no crash, and the single-partition
+    window's answer (an empty frame has no partition offsets at all)."""
+    from lucene_mapreduce_spark.operators.parity import (
+        distributed_ntile,
+        distributed_running,
+    )
+
+    df = spark.range(0, n).select("id", (F.col("id") + 5).alias("v"))
+    assert [r["i"] for r in distributed_row_number(df, "id", "i").collect()] == [1] * n
+    assert [r["tile"] for r in distributed_ntile(df, "id", 4, "tile").collect()] == [1] * n
+    run = distributed_running(df, "id", [("v", "sum", "cs"), ("v", "max", "cm")])
+    assert [(r["cs"], r["cm"]) for r in run.collect()] == [(5, 5)] * n
+
+
+def test_helpers_on_all_ties(spark):
+    """Every row tied on the order key: ranks are a permutation of 1..n,
+    ntile sizes follow the ceil-first rule, and the running sum/max end at
+    the totals."""
+    from lucene_mapreduce_spark.operators.parity import (
+        distributed_ntile,
+        distributed_running,
+    )
+
+    n = 103
+    df = spark.range(0, n).select("id", F.lit(7).alias("key"), F.lit(2).alias("v"))
+    ranks = sorted(r["i"] for r in distributed_row_number(df, "key", "i").collect())
+    assert ranks == list(range(1, n + 1))
+    tiles = distributed_ntile(df, "key", 10, "tile").groupBy("tile").count().toPandas()
+    assert sorted(tiles["count"], reverse=True) == [11, 11, 11, 10, 10, 10, 10, 10, 10, 10]
+    run = distributed_running(df, "key", [("v", "sum", "cs"), ("v", "max", "cm")]).toPandas()
+    assert sorted(run.cs) == list(range(2, 2 * n + 1, 2))
+    assert set(run.cm) == {2}
